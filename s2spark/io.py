@@ -185,6 +185,7 @@ def read_table(spark: SparkSession, table: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 CELL_SORT_COL = "cell_sort"
+_M64 = (1 << 64) - 1
 
 
 def write_clustered(df: DataFrame, path: str, cell_col: str = "cell_id",
@@ -200,11 +201,25 @@ def write_clustered(df: DataFrame, path: str, cell_col: str = "cell_id",
     100 TB. The column is STORED (not recomputed) so range predicates
     are plain attribute comparisons that push down to the parquet
     reader (and, on Iceberg/Delta, to file-level skipping).
-    Pruning is pinned empirically in tests/test_storage_pruning.py."""
-    df.withColumn(CELL_SORT_COL, CC.sortable(cell_col)) \
-        .repartitionByRange(num_files, CELL_SORT_COL) \
-        .sortWithinPartitions(CELL_SORT_COL) \
-        .write.mode("overwrite").parquet(path)
+    Pruning is pinned empirically in tests/test_storage_pruning.py.
+
+    Leaf-id contract: ``cell_col`` holds LEAF cell ids, as written by
+    ``joins.with_cell_id``, so ``cell_sort`` holds only (sortable)
+    leaf ids — :func:`scan_cell_ranges` relies on it when it merges
+    covering ranges across gaps that contain no leaf id.
+
+    The keyed frame is persisted for the duration of the write and
+    released before returning: ``repartitionByRange`` samples its
+    bounds in a job of its own, which otherwise re-runs the whole
+    upstream (the Arrow encode UDF of ``with_cell_id``) before the
+    write runs it again."""
+    keyed = df.withColumn(CELL_SORT_COL, CC.sortable(cell_col)).persist()
+    try:
+        keyed.repartitionByRange(num_files, CELL_SORT_COL) \
+            .sortWithinPartitions(CELL_SORT_COL) \
+            .write.mode("overwrite").parquet(path)
+    finally:
+        keyed.unpersist()
 
 
 def scan_cell_range(spark: SparkSession, path: str,
@@ -216,6 +231,29 @@ def scan_cell_range(spark: SparkSession, path: str,
     return scan_cell_ranges(spark, path, [(cell_lo, cell_hi)])
 
 
+def merge_leaf_ranges(ranges) -> list[tuple[int, int]]:
+    """sort uint64-inclusive ``(lo, hi)`` cell-id ranges and merge any
+    two with no leaf id between them. Leaf ids are odd (and so is every
+    ``range_min``/``range_max``), so ``next_lo <= prev_hi + 2`` means
+    the gap holds no leaf id: the merged list matches exactly the same
+    leaf ids, and prunes exactly the same row groups (whose min/max are
+    leaf ids too). Signed int64 inputs are read as their uint64 bits."""
+    merged: list[tuple[int, int]] = []
+    for lo, hi in sorted((int(lo) & _M64, int(hi) & _M64)
+                         for lo, hi in ranges):
+        if merged and lo <= merged[-1][1] + 2:
+            merged[-1] = (merged[-1][0], max(merged[-1][1], hi))
+        else:
+            merged.append((lo, hi))
+    return merged
+
+
+def _sortable_scalar(x: int) -> int:
+    """python twin of ``columns.sortable``: uint64 bits -> the
+    order-preserving signed int64."""
+    return (int(x) & _M64) - (1 << 63)
+
+
 def scan_cell_ranges(spark: SparkSession, path: str,
                      ranges: list) -> DataFrame:
     """scan a clustered dataset for ids in ANY of the uint64-inclusive
@@ -223,18 +261,22 @@ def scan_cell_ranges(spark: SparkSession, path: str,
     cell contributes its [range_min, range_max] interval, the OR of
     BETWEENs pushes to the parquet reader, and on the Hilbert-sorted
     layout only row groups overlapping some covering interval are
-    read ("scan the tile, not the planet")."""
+    read ("scan the tile, not the planet").
 
-    def _sortable_scalar(x: int) -> int:
-        u = (int(x) ^ (1 << 63)) & ((1 << 64) - 1)
-        return u - (1 << 64) if u >= (1 << 63) else u
-
-    pred = None
-    for lo, hi in ranges:
-        p = F.col(CELL_SORT_COL).between(
-            F.lit(_sortable_scalar(lo)), F.lit(_sortable_scalar(hi)))
-        pred = p if pred is None else (pred | p)
-    return spark.read.parquet(path).where(pred)
+    Leaf-id contract: ``cell_sort`` holds the leaf ids written through
+    ``joins.with_cell_id`` (see :func:`write_clustered`), so the ranges
+    are first merged across gaps that contain no leaf id
+    (:func:`merge_leaf_ranges`) — same rows, fewer arms. The predicate
+    is ONE SQL expression (one JVM call; building it Column by Column
+    costs several py4j calls per range) whose bounds are ``L``-suffixed
+    BIGINT literals, typed like the column at any magnitude (unsuffixed,
+    small bounds parse as INT and -2^63 may parse as a decimal, both of
+    which the analyzer must cast). An empty range list reads nothing and
+    returns the table's schema."""
+    arms = [f"{CELL_SORT_COL} BETWEEN {_sortable_scalar(lo)}L "
+            f"AND {_sortable_scalar(hi)}L"
+            for lo, hi in merge_leaf_ranges(ranges)]
+    return spark.read.parquet(path).where(F.expr(" OR ".join(arms) or "false"))
 
 
 def result_fingerprint(df: DataFrame) -> int:

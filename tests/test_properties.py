@@ -82,3 +82,47 @@ def test_token_roundtrip_prop(lat, lng):
     for lvl in (0, 7, 15, 30):
         c = C.parent(leaf, lvl)
         assert (C.from_token(C.to_token(c)) == c).all()
+
+
+# covering cells at mixed levels: (face, 60-bit leaf position, level),
+# with the face-boundary positions drawn often
+_pos_st = st.one_of(st.integers(0, (1 << 60) - 1),
+                    st.sampled_from([0, 1, (1 << 60) - 2, (1 << 60) - 1]))
+_cell_st = st.tuples(st.integers(0, 5), _pos_st, level_st)
+
+
+def _cell_ranges(cells):
+    leaves = np.array([(f << 61) | (p << 1) | 1 for f, p, _ in cells],
+                      dtype=np.uint64)
+    ids = np.array([C.parent(leaf, lvl) for leaf, (_, _, lvl)
+                    in zip(leaves, cells)], dtype=np.uint64)
+    return list(zip(C.range_min(ids).tolist(), C.range_max(ids).tolist()))
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_cell_st, min_size=0, max_size=40),
+       st.lists(st.tuples(st.integers(0, 5), _pos_st), max_size=20))
+def test_merge_leaf_ranges_keeps_leaf_membership(cells, probes):
+    from s2spark.io import merge_leaf_ranges
+
+    ranges = _cell_ranges(cells)
+    merged = merge_leaf_ranges(ranges)
+
+    # sorted, disjoint, and no two outputs could still merge
+    for lo, hi in merged:
+        assert lo <= hi
+    for (_, hi), (lo, _) in zip(merged, merged[1:]):
+        assert lo > hi + 2
+
+    # membership only changes at range ends, so probing every end and
+    # its neighbouring leaf ids (plus random leaves) covers it
+    leaves = {(f << 61) | (p << 1) | 1 for f, p in probes}
+    for lo, hi in ranges:
+        leaves.update(x for x in (lo - 2, lo, hi, hi + 2)
+                      if 0 < x < (1 << 64))
+
+    def member(rs, x):
+        return any(lo <= x <= hi for lo, hi in rs)
+
+    for x in leaves:
+        assert member(ranges, x) == member(merged, x), hex(x)
